@@ -1,23 +1,32 @@
-"""Connected components for dedup clustering.
+"""Graph operators and the layout-preserving materialization they
+share.
 
-Near-dup detection (q49/q60) yields PAIRS; deduplication needs
-CLUSTERS — transitive closure over the pair graph, one canonical
-survivor per component. This is the iterative min-label-propagation
-algorithm (each vertex repeatedly adopts the smallest label among
-itself and its neighbors) expressed in DataFrame ops:
+- ``materialize(df, *cols)`` — the ONE in-query materialization
+  primitive: localCheckpoint with the hash layout preserved (AQE-off
+  window), optionally hash-repartitioned by ``cols`` first. q88
+  (through ``connected_components``), q94, q98, q108 and q144 build
+  on it.
+- ``triangle_census`` — degree-ordered wedge enumeration + closing
+  probe (q98 and the bucketed cluster lane).
+- ``connected_components`` / ``dedup_clusters`` — near-dup detection
+  (q49/q60) yields PAIRS; deduplication needs CLUSTERS — transitive
+  closure over the pair graph, one canonical survivor per component.
+  This is the iterative min-label-propagation algorithm (each vertex
+  repeatedly adopts the smallest label among itself and its
+  neighbors) expressed in DataFrame ops:
 
-- one iteration = two broadcast-or-shuffle joins + a groupBy min,
-- convergence in O(component diameter) iterations — near-dup
-  clusters are shallow (pairs all mutually similar), so 2-4 rounds,
-- each round's result is localCheckpoint()ed: iterative plans
-  otherwise stack lineage until planning time explodes (the classic
-  iterative-Spark trap; GraphX/GraphFrames do the same internally).
+  - one iteration = two broadcast-or-shuffle joins + a groupBy min,
+  - convergence in O(component diameter) iterations — near-dup
+    clusters are shallow (pairs all mutually similar), so 2-4 rounds,
+  - each round's result is localCheckpoint()ed: iterative plans
+    otherwise stack lineage until planning time explodes (the classic
+    iterative-Spark trap; GraphX/GraphFrames do the same internally).
 
-Oracle-checked via q88: transitive closure IS expressible in DuckDB
-as a recursive CTE over reachability pairs (UNION dedups, so it
-terminates; the min-per-vertex aggregate runs outside the recursion,
-which is the part recursive SQL restricts) — on top of the known-
-graph unit tests here.
+  Oracle-checked via q88: transitive closure IS expressible in DuckDB
+  as a recursive CTE over reachability pairs (UNION dedups, so it
+  terminates; the min-per-vertex aggregate runs outside the
+  recursion, which is the part recursive SQL restricts) — on top of
+  the known-graph unit tests here.
 """
 
 from __future__ import annotations
@@ -26,77 +35,60 @@ import threading
 
 from pyspark.sql import DataFrame, functions as F
 
-#: serializes the AQE-off window in ``checkpoint_partitioned`` so
-#: overlapping calls can't restore each other's stale conf value
+#: serializes the AQE-off window in ``materialize`` so overlapping
+#: calls can't restore each other's stale conf value
 _AQE_TOGGLE_LOCK = threading.Lock()
 
 
-def checkpoint_partitioned(df: DataFrame, cols: list[str],
-                           num_partitions: int) -> DataFrame:
-    """localCheckpoint ``df`` hash-partitioned by ``cols`` so that
-    downstream joins/aggs keyed on ``cols`` (or a superset) reuse the
-    materialized layout exchange-free — the in-query analogue of
+def materialize(df: DataFrame, *cols: str) -> DataFrame:
+    """localCheckpoint ``df`` with its hash layout preserved, so that
+    downstream joins/aggs keyed on that layout (or a superset) read
+    the materialized blocks exchange-free — the in-query analogue of
     ``sources/layout.write_bucketed`` for iterative/multi-branch
-    plans that read one frame several times (q98's three triangle
-    branches, graph loops).
+    plans that read one frame several times (q98's triangle
+    branches, the q88/q108/q144 graph loops, q94's self-join).
+
+    With ``cols`` the frame is first hash-repartitioned by them into
+    ``spark.sql.shuffle.partitions`` partitions (the count Spark
+    plans a column repartition with while AQE is off). Without, the
+    frame's EXISTING output partitioning is kept — for plans that
+    already end in the wanted layout (an aggregation or distinct over
+    a materialized scan is hash-partitioned by its keys), where a
+    repartition would only pay a second exchange of identical
+    placement.
 
     The non-obvious part: under AQE, ``Dataset.localCheckpoint``
-    captures ``AdaptiveSparkPlanExec.outputPartitioning`` which
-    reports UnknownPartitioning, so the layout paid for by the
-    repartition is silently thrown away (measured: the q98 wedge
+    captures ``AdaptiveSparkPlanExec.outputPartitioning``, which
+    reports UnknownPartitioning, so the layout is silently thrown
+    away and every consumer re-exchanges (measured: the q98 wedge
     self-join kept both src Exchanges). Toggling AQE off around the
-    checkpoint action preserves HashPartitioning(cols, n) in the
-    LogicalRDD; AQE is restored immediately after and still optimizes
-    every downstream stage.
+    checkpoint action preserves HashPartitioning in the LogicalRDD;
+    AQE is restored immediately after and still optimizes every
+    downstream stage.
+
+    Eager checkpoint, not ``.cache()``: a cached frame that one plan
+    references through several join branches is re-instanced by
+    relation deduplication (fresh LogicalRDD attrs), ``sameResult``
+    no longer matches the cache entry, and every "cached" read
+    recomputes (measured: q108's degree frame showed 0
+    InMemoryTableScan with 1 registered cache entry). Every
+    reference to a checkpoint scans the materialized blocks.
 
     Concurrency (ADVICE r4): the toggle mutates SESSION-global conf,
     so a query compiled on the same SparkSession during the
-    checkpoint action would silently plan without AQE. The lock below
-    serializes concurrent ``checkpoint_partitioned`` calls (so a
-    second call can't restore the wrong prior value); callers running
-    OTHER queries concurrently on one session should compile them on
-    ``spark.newSession()`` (separate runtime conf, shared state) —
-    the bench/driver harness is single-threaded per session, where
+    checkpoint action would silently plan without AQE. The lock
+    serializes concurrent calls (so a second call can't restore the
+    wrong prior value); callers running OTHER queries concurrently on
+    one session should compile them on ``spark.newSession()``
+    (separate runtime conf, shared state) — bench.py and
+    ``__spark_entry__`` run one query at a time per session, where
     the window is harmless."""
     spark = df.sparkSession
     with _AQE_TOGGLE_LOCK:
         before = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            return df.repartition(num_partitions, *cols).localCheckpoint()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", before)
-
-
-def checkpoint_preserving(df: DataFrame) -> DataFrame:
-    """localCheckpoint ``df`` with its EXISTING output partitioning
-    preserved — :func:`checkpoint_partitioned` without the extra
-    repartition, for plans that ALREADY carry the wanted layout
-    (e.g. an aggregation or distinct planned over a
-    checkpoint-partitioned scan, whose output partitioning is that
-    same hash). Same AQE-off window around the action: under AQE the
-    checkpoint captures UnknownPartitioning and downstream consumers
-    re-exchange (see checkpoint_partitioned's docstring); same lock,
-    same single-session caveat.
-
-    Deleted in round 12's inherited commit as dead code (its r11
-    trial adopters were A/B-rejected), reintroduced WITH callers:
-    q108's node-sized degree frame and q144's BFS layers, where the
-    alternative ``.cache()`` silently fails — a cached frame derived
-    from a localCheckpoint that the SAME plan references through
-    multiple join branches is re-instanced by relation
-    deduplication (fresh LogicalRDD attrs), ``sameResult`` no longer
-    matches the cache entry, and every "cached" read recomputes its
-    aggregation (measured: q108's executed plan showed 0
-    InMemoryTableScan with 1 registered cache entry; the per-
-    iteration deg subtree re-aggregated 4×). An eager checkpoint is
-    immune: every reference scans the materialized blocks."""
-    spark = df.sparkSession
-    with _AQE_TOGGLE_LOCK:
-        before = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.localCheckpoint()
+            return (df.repartition(*cols) if cols else df).localCheckpoint()
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", before)
 
@@ -110,8 +102,8 @@ def triangle_census(oriented: DataFrame) -> DataFrame:
     per-vertex wedge fan-out is the oriented out-degree, O(√m).
 
     Returns a 1-row frame ``n_triangles``. The caller owns
-    ``oriented``'s materialization/layout: q98 passes a
-    src-partitioned checkpoint (``checkpoint_partitioned``); the
+    ``oriented``'s materialization/layout: q98 passes
+    ``materialize(oriented, "src")``; the
     cluster lane passes a catalog table written by
     ``sources.layout.write_bucketed(..., ['src'])``, which makes the
     wedge self-join bucket-local (SelectedBucketsCount, zero
@@ -192,16 +184,15 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     # (e.g. q83's prefix join) runs twice (measured 2× at sf0.1)
     e0 = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
           .localCheckpoint())
-    # materialized b-partitioned with the layout preserved
-    # (checkpoint_partitioned): every propagation round joins on b,
-    # so the edge side never re-exchanges — only the vertex-sized
-    # label frame moves per iteration (the q108/q144 lane)
-    und = checkpoint_partitioned(
+    # materialized b-partitioned with the layout preserved: every
+    # propagation round joins on b, so the edge side never
+    # re-exchanges — only the vertex-sized label frame moves per
+    # iteration (the q108/q144 lane)
+    und = materialize(
         e0.union(e0.select(F.col("b").alias("a"),
                            F.col("a").alias("b")))
         .distinct(),
-        ["b"],
-        int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+        "b")
     labels = (und.select(F.col("a").alias("vertex"))
               .distinct()
               .withColumn("component", F.col("vertex")))

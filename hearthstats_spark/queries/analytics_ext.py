@@ -236,18 +236,15 @@ def q98_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
     from hearthstats_spark.operators.graph import (
-        checkpoint_partitioned, triangle_census)
+        materialize, triangle_census)
 
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # hash-partition by src AND preserve that layout through the
-    # checkpoint (AQE would otherwise discard it — see
-    # checkpoint_partitioned): the wedge self-join (src = src) then
-    # reads both sides exchange-free and the closing join exchanges
-    # only the wedge frame to meet yz's existing src layout — two
-    # edge-sized Exchanges gone (the write-time-shuffle idea behind
+    # checkpoint: the wedge self-join (src = src) then reads both
+    # sides exchange-free — two edge-sized Exchanges gone (the
+    # write-time-shuffle idea behind
     # sources/layout.write_bucketed applied to an in-query
     # materialization; plan-pinned in tests/test_layout.py)
-    oriented = checkpoint_partitioned(
+    oriented = materialize(
         # deg is vertex-sized (SF-linear) — no broadcast hint; AQE
         # promotes these key-equi joins at runtime when the degree
         # frame fits (VERDICT r4 #1: a forced hint is never demoted)
@@ -258,7 +255,7 @@ def q98_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(a_first, F.col("db")).otherwise(F.col("da"))
             .alias("d_dst"),
         ),
-        ["src"], n_shuffle)
+        "src")
     tri = triangle_census(oriented)
     return (
         n_edges.crossJoin(tri).crossJoin(wedges)

@@ -518,35 +518,23 @@ def q108_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
          .unionAll(e.select(F.col("b").alias("src"),
                             F.col("a").alias("dst"))))
-    from hearthstats_spark.operators.graph import (
-        checkpoint_partitioned, checkpoint_preserving)
+    from hearthstats_spark.operators.graph import materialize
 
-    # Optimization round 12 (guide §2.3/§2.4): materialize EDGES ONLY
-    # (src, dst — two longs), not the former (src, dst, d) join
-    # product. The degree column is per-SRC, so joining it onto every
-    # edge row before the checkpoint paid an edge-sized join exchange
-    # AND widened the materialization by a third just to carry a
-    # value the iteration can attach on the node-sized frame instead
+    # materialize EDGES ONLY (src, dst — two longs), not a
+    # (src, dst, d) join product: the degree column is per-SRC, so
+    # joining it onto every edge row would pay an edge-sized join
+    # exchange and widen the materialization by a third just to carry
+    # a value the iteration attaches on the node-sized frame instead
     # (rank/d is identical per src either way — same IEEE divide on
-    # the same inputs, see pagerank_loop). Build went from
-    # u-exchange + deg-exchange + join + repartition + edge-distinct
-    # (measured 2.03 s at sf0.1) to ONE edge exchange + an
-    # exchange-free co-partitioned deg agg (0.88 s): deg's groupBy
-    # reads the checkpointed hash(src) layout in place, and the node
-    # set is deg's group keys — the separate edge-sized distinct for
-    # rank init is gone too.
-    ue = checkpoint_partitioned(
-        u, ["src"], int(spark.conf.get("spark.sql.shuffle.partitions")))
-    # node-sized, read once per iteration (4×): EAGER checkpoint, not
-    # .cache() — this plan references ue through several join
-    # branches, relation dedup re-instances the checkpoint scan per
-    # branch, and a cache entry keyed on one instance then never
-    # sameResult-matches (measured: 0 InMemoryTableScan with the
-    # cache registered; deg re-aggregated every iteration).
-    # checkpoint_preserving keeps the agg's hash(src) output layout
-    # without checkpoint_partitioned's redundant repartition — the
-    # agg output is already partitioned by its grouping key.
-    deg = checkpoint_preserving(
+    # the same inputs, see pagerank_loop). The build is ONE edge
+    # exchange plus an exchange-free deg agg: deg's groupBy reads the
+    # materialized hash(src) layout in place, and the node set is
+    # deg's group keys — no edge-sized distinct for rank init.
+    ue = materialize(u, "src")
+    # node-sized, read once per iteration (4×) through several join
+    # branches; materialize keeps the agg's hash(src) output layout
+    # without a repartition
+    deg = materialize(
         ue.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
     nodes = deg.select(F.col("src").alias("node"))
     ranks = pagerank_loop(ue, nodes, deg=deg)

@@ -1106,14 +1106,13 @@ def q144_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join key, so each BFS round plans exactly ONE
     frontier-sized Exchange — the dst re-key inside distinct(), the
     dataflow minimum — instead of re-deriving the frontier layout
-    per depth (plan-pinned in tests/test_ext4.py). Oracle: recursive
+    per depth (plan-pinned in tests/test_layout.py). Oracle: recursive
     CTE with the UNION-dedup doing the visited-set work, MIN(d) per
     vertex outside the recursion."""
     from functools import reduce
 
     from hearthstats_spark.operators.ann_index import persisted
-    from hearthstats_spark.operators.graph import (
-        checkpoint_partitioned, checkpoint_preserving)
+    from hearthstats_spark.operators.graph import materialize
     from hearthstats_spark.queries.analytics_ext import co_order_edges
 
     from hearthstats_spark.queries.analytics_ext import BASKET_CAP
@@ -1124,42 +1123,36 @@ def q144_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = persisted(spark, sf_dir, "co_order_edges",
                   lambda: co_order_edges(spark, sf_dir),
                   table="lineitem", version=BASKET_CAP)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # materialize src-partitioned (layout preserved through the
     # checkpoint): all 3 rounds join on src, so the edge side never
     # re-exchanges — only the frontier moves, the BFS invariant
-    und = checkpoint_partitioned(
+    und = materialize(
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"),
                            F.col("a").alias("dst"))),
-        ["src"], n_part)
-    # seed from the CHECKPOINTED frame — e.agg(min) would re-run the
+        "src")
+    # seed from the MATERIALIZED frame — e.agg(min) would re-run the
     # whole basket-expansion pipeline a second time just for one
     # scalar (min(src) over both directions == min vertex == min(a),
     # since co_order_edges emits a < b)
     seed = und.agg(F.min("src").alias("v"))
-    layers = [checkpoint_partitioned(
-        seed.select("v", F.lit(0).alias("depth")), ["v"], n_part)]
+    layers = [materialize(seed.select("v", F.lit(0).alias("depth")), "v")]
     frontier = layers[0].select("v")
     for depth in range(1, 4):
         nxt = (und.join(frontier, und["src"] == frontier["v"])
                .select(F.col("dst").alias("v")).distinct())
         for prev in layers:
             nxt = nxt.join(prev.select("v"), "v", "left_anti")
-        # checkpoint the LAYER (frontier-sized): the next round's join
-        # must not re-run this round's expansion, the final union
+        # materialize the LAYER (frontier-sized): the next round's
+        # join must not re-run this round's expansion, the final union
         # reads materialized blocks only, and the hash(v, N) layout
         # feeds the next round's frontier join + all later anti-joins
-        # exchange-free. Round 12 (guide §2.4): the layer plan
-        # ALREADY ends in that layout — distinct() exchanges on
-        # hash(v, n_part) and the anti-joins/withColumn preserve it —
-        # so checkpoint_partitioned's repartition was a second
-        # exchange of every layer carrying identical placement;
-        # checkpoint_preserving materializes without it (one
-        # frontier-sized exchange per BFS round, the dataflow
-        # minimum; plan-pinned in tests/test_ext4.py)
-        layer = checkpoint_preserving(
-            nxt.withColumn("depth", F.lit(depth)))
+        # exchange-free. The layer plan ALREADY ends in that layout —
+        # distinct() exchanges on hash(v, N) and the anti-joins and
+        # withColumn preserve it — so no repartition: one
+        # frontier-sized exchange per BFS round, the dataflow minimum
+        # (plan-pinned in tests/test_layout.py)
+        layer = materialize(nxt.withColumn("depth", F.lit(depth)))
         layers.append(layer)
         frontier = layer.select("v")
     visited = reduce(lambda a, b: a.unionByName(b), layers)

@@ -448,8 +448,7 @@ def q187_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (operators/ann_index) — IVF-Flat keeps exact vectors, so only
     # the quantizer side is an artifact; the vector scan stays live
     cc = persisted(spark, sf_dir, "cells_codebook",
-                   lambda: _trained_codebook(fullsub)
-                   ).cache()                  # (m=0, cid, cv): cells
+                   lambda: _trained_codebook(fullsub))  # (m=0, cid, cv)
     assign = persisted(spark, sf_dir, "cell_assign",
                        lambda: encode_against(fullsub, cc))
     cells = (e.select("vec_id", v.alias("v"))

@@ -408,49 +408,35 @@ def q94_item_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_MIN_CO} users before the join (cnt is already computed for
     exactly this)."""
     e = load_table(spark, sf_dir, "events")
-    from hearthstats_spark.operators.graph import checkpoint_preserving
+    from hearthstats_spark.operators.graph import materialize
 
-    # optimization round 11 (guide §2.4): ui — the JSON-extract +
-    # distinct event pass — was re-derived by all four consumers
-    # (both self-join sides, ca, cb: 4 corpus scans). Materialize it
-    # ONCE, user_id-partitioned with the layout preserved, so the
-    # self-join reads both sides in place (zero join exchanges) and
-    # cnt aggregates the materialized frame; cnt itself is cached so
-    # ca/cb share one item-keyed aggregation.
-    #
-    # round 12 (VERDICT r11 item 5; guide §2.3/§2.4): the r11 form
-    # paid TWO exchanges to reach that layout — distinct's
-    # hash(user_id, item) plus checkpoint_partitioned's
-    # re-repartition to hash(user_id). Repartitioning the RAW rows
-    # by user_id FIRST lets the planner run distinct exchange-free
-    # (hash(user_id) satisfies the (user_id, item) clustering) and
-    # checkpoint_preserving keeps that layout: ONE exchange of
+    # ui — the JSON-extract + distinct event pass — is read by four
+    # consumers (both self-join sides, ca, cb): materialize it ONCE,
+    # user_id-partitioned with the layout preserved, so the self-join
+    # reads both sides in place (zero join exchanges). Repartitioning
+    # the RAW rows by user_id before the distinct lets the planner
+    # run the distinct exchange-free (hash(user_id) satisfies the
+    # (user_id, item) clustering), so the build pays ONE exchange of
     # ~1.07× the distinct bytes (measured view-event dup factor at
-    # sf0.1) instead of two at ~1.0× each — ≈46% fewer shuffled
-    # bytes on the materialization path, same zero-join-exchange
-    # self-join. The VERDICT-flagged alternative (cache-only, no
-    # checkpoint) was A/B'd in the same windows: it ties locally
-    # (2.80 vs 2.82 s interleaved medians) but pays TWO extra
-    # distinct-frame exchanges at the join — wrong at scale.
-    ui = checkpoint_preserving(
+    # sf0.1) instead of distinct's hash(user_id, item) plus a second
+    # re-key to hash(user_id). Skew exposure: a heavy user's rows all
+    # land in one partition, and no skew split happens inside the
+    # AQE-off window (nor in the exchange-free self-join after it).
+    ui = materialize(
         e.filter(F.col("event_type") == "view")
         .select("user_id",
                 F.get_json_object("props", "$.k").cast("bigint")
                  .alias("item"))
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                     "user_id")
+        .repartition("user_id")
         .distinct()
     )
-    # round 12: cnt was `.cache()`d, but a cached frame derived from
-    # a localCheckpoint and referenced through two branches (ca, cb)
-    # of the same plan is re-instanced by relation dedup and the
-    # cache silently never substitutes (0 InMemoryTableScan in the
-    # r11 plan dump — the same failure q108's degree frame hit), so
-    # ca and cb each re-aggregated ui. checkpoint_preserving is the
-    # immune form: the item-grain agg runs ONCE and keeps its
-    # hash(item) layout, so at scale the ca/cb joins can read it
-    # co-partitioned.
-    cnt = checkpoint_preserving(
+    # cnt is read by two branches (ca, cb) of the same plan, so it is
+    # materialized, not cached (see materialize): the item-grain agg
+    # runs ONCE and keeps its hash(item) layout. That spares only the
+    # cnt-side exchange of the ca/cb attach joins — co is
+    # hash(item_a, item_b) from its groupBy, so co still re-keys to
+    # meet each of them.
+    cnt = materialize(
         ui.groupBy("item").agg(F.count(F.lit(1)).alias("n")))
     a, b = ui.alias("a"), ui.alias("b")
     co = (

@@ -27,11 +27,20 @@ Triage notes for specific failures (ADVICE r10):
   shingles/pairs on the ORACLE side only.
   tests/test_operators.py::test_corpus_within_oracle_series_bounds
   pins the corpus contract at both driver SFs.
+- **[DEAD] <query>: N cached frame(s) never scanned**: the query
+  ``.cache()``d or ``.persist()``ed a frame during its build, left it
+  registered, and no execution loaded its column buffers — the cache
+  only costs storage-pool memory. Either the frame has no reader, or
+  its readers plan a re-instanced copy that never matches the cache
+  entry (a frame referenced through several branches of one plan —
+  use ``operators.graph.materialize`` there). Delete the cache or
+  fix the reader.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import importlib
 import sys
 import time
@@ -41,6 +50,46 @@ sys.path.insert(0, ".")
 from hearthstats_spark.oracle import check_query, duck_connect  # noqa: E402
 from hearthstats_spark.queries.registry import REGISTRY  # noqa: E402
 from hearthstats_spark.session import get_spark  # noqa: E402
+
+
+@contextlib.contextmanager
+def recording_caches():
+    """Yield a list that collects every frame ``.cache()``d or
+    ``.persist()``ed while the block runs."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames = []
+    originals = {m: getattr(DataFrame, m) for m in ("cache", "persist")}
+
+    def recording(original):
+        def method(df, *args, **kwargs):
+            frames.append(df)
+            return original(df, *args, **kwargs)
+        return method
+
+    for name, original in originals.items():
+        setattr(DataFrame, name, recording(original))
+    try:
+        yield frames
+    finally:
+        for name, original in originals.items():
+            setattr(DataFrame, name, original)
+
+
+def dead_caches(frames) -> list:
+    """The frames still registered with the CacheManager whose column
+    buffers were never loaded (the accessor perfbench/worker.py reads
+    for ``materialize.cache_scan_ratio``). Frames unpersisted by their
+    own query are no longer registered, so they are skipped."""
+    dead = []
+    for df in frames:
+        manager = df.sparkSession._jsparkSession.sharedState().cacheManager()
+        entry = manager.lookupCachedData(df._jdf)
+        if entry.isDefined() and not (entry.get().cachedRepresentation()
+                                      .cacheBuilder()
+                                      .isCachedColumnBuffersLoaded()):
+            dead.append(df)
+    return dead
 
 
 def main() -> int:
@@ -69,28 +118,31 @@ def main() -> int:
         if only and not any(name.startswith(o) for o in only):
             continue
         t0 = time.time()
-        if q.oracle is None:
+        with recording_caches() as cached:
             try:
-                n = q.fn(spark, args.sf).count()
-                print(f"[rows] {name}: {n} rows ({time.time()-t0:.1f}s)")
+                if q.oracle is None:
+                    n = q.fn(spark, args.sf).count()
+                    print(f"[rows] {name}: {n} rows ({time.time()-t0:.1f}s)")
+                    ok = True
+                else:
+                    res = check_query(spark, con, args.sf, name, q.fn,
+                                      q.oracle)
+                    print(f"{res} ({time.time()-t0:.1f}s)")
+                    ok = res.ok
             except Exception as e:
-                n_fail += 1
-                print(f"[FAIL] {name}: {type(e).__name__}: {e}")
-            continue
-        try:
-            res = check_query(spark, con, args.sf, name, q.fn, q.oracle)
-        except Exception as e:
-            n_fail += 1
-            print(f"[FAIL] {name}: {type(e).__name__}: {str(e)[:500]}")
-            continue
-        print(f"{res} ({time.time()-t0:.1f}s)")
-        if not res.ok:
-            n_fail += 1
+                ok = False
+                print(f"[FAIL] {name}: {type(e).__name__}: {str(e)[:500]}")
+        dead = dead_caches(cached) if ok else []
+        if dead:
+            ok = False
+            print(f"[DEAD] {name}: {len(dead)} cached frame(s) never "
+                  "scanned")
+        n_fail += not ok
         # sweep boundary: release the guard-applied cached frames
         # (ADVICE r7) so a 200-query sweep doesn't accumulate one
         # small cached frame per applied broadcast_bounded site —
-        # plus every query-level .cache() (q92's dl/tf, q94's cnt,
-        # the KS vals frame, the dedup shingle frames): the queries
+        # plus every query-level .cache() (q92's dl/tf, the KS vals
+        # frame, the dedup shingle frames): the queries
         # deliberately leave them to their harness boundary (ADVICE
         # r11 item 3), and this is that boundary, same as
         # bench._drop_blocks

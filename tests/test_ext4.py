@@ -267,42 +267,3 @@ def test_q137_null_group_ties_break_deterministically(spark):
     top = (c.withColumn("rk", F.row_number().over(w))
            .filter(F.col("rk") == 1).collect())
     assert top[0]["k"] == 7
-
-
-def test_q144_bfs_round_single_exchange(spark):
-    """One BFS round (frontier ⋈ edges → distinct → anti-join vs a
-    prior layer) must plan exactly ONE hash Exchange — the
-    frontier-sized dst re-key inside distinct(), the dataflow
-    minimum. The edge side reads its checkpointed hash(src, N)
-    layout; layers are checkpointed hash(v, N), so the join and the
-    anti-joins either reuse that layout or broadcast the tiny
-    frontier (AQE's call) — never re-shuffle the graph
-    (VERDICT r4 item 5, mirrors q144's loop verbatim)."""
-    import re
-
-    from hearthstats_spark.operators.graph import checkpoint_partitioned
-
-    edges = spark.range(0, 2000).select(
-        (F.col("id") % 500).alias("src"),
-        ((F.col("id") * 7) % 500).alias("dst"))
-    und = checkpoint_partitioned(edges, ["src"], 8)
-    seed = checkpoint_partitioned(
-        spark.range(0, 1).select(F.lit(0).cast("long").alias("v"),
-                                 F.lit(0).alias("depth")), ["v"], 8)
-    frontier = seed.select("v")
-    nxt = (und.join(frontier, und["src"] == frontier["v"])
-           .select(F.col("dst").alias("v")).distinct()
-           .join(seed.select("v"), "v", "left_anti"))
-    plan = nxt._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
-    # round 12: the layer checkpoint must NOT add a second exchange —
-    # the distinct's hash(v, N) output is the layer's layout, and
-    # checkpoint_preserving materializes it as-is (q144's loop; a
-    # checkpoint_partitioned here would re-exchange every layer into
-    # the identical placement)
-    from hearthstats_spark.operators.graph import checkpoint_preserving
-
-    layer = checkpoint_preserving(nxt.withColumn("depth", F.lit(1)))
-    part = str(layer._jdf.queryExecution()
-               .executedPlan().outputPartitioning())
-    assert "hashpartitioning" in part and "v#" in part

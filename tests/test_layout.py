@@ -101,7 +101,7 @@ def test_bucketed_triangle_census_wedge_join_bucket_local(spark):
     the wedge frame meeting yz's src layout. Count must equal the
     checkpoint-lane kernel exactly."""
     from hearthstats_spark.operators.graph import (
-        checkpoint_partitioned, triangle_census)
+        materialize, triangle_census)
     from hearthstats_spark.queries.analytics_ext import co_order_edges
 
     e = co_order_edges(spark, SF_SMALL).localCheckpoint()
@@ -140,7 +140,7 @@ def test_bucketed_triangle_census_wedge_join_bucket_local(spark):
             assert "BroadcastHashJoin" in p
 
             want = triangle_census(
-                checkpoint_partitioned(oriented, ["src"], 8)
+                materialize(oriented, "src")
             ).collect()[0]["n_triangles"]
             assert tri.collect()[0]["n_triangles"] == want > 0
         finally:
@@ -150,30 +150,103 @@ def test_bucketed_triangle_census_wedge_join_bucket_local(spark):
         spark.sql("DROP TABLE IF EXISTS t_tri_edges_b")
 
 
-def test_checkpoint_partitioned_preserves_layout(spark):
-    """checkpoint_partitioned must carry HashPartitioning through the
-    localCheckpoint (under AQE a plain repartition+localCheckpoint
-    reports UnknownPartitioning and every downstream join re-shuffles)
-    and must restore the AQE flag."""
-    from hearthstats_spark.operators.graph import checkpoint_partitioned
+#: every ``materialize`` call each real query makes, in order, as the
+#: hash key the materialized frame must still be partitioned by
+_MATERIALIZED_LAYOUTS = {
+    "q94_item_cooccur": ["user_id", "item"],
+    "q98_triangle_count": ["src"],
+    "q108_pagerank": ["src", "src"],
+    "q144_bfs_reach": ["src", "v", "v", "v", "v"],
+}
 
-    df = spark.range(10_000).select(
-        (F.col("id") % 97).alias("k"), F.col("id").alias("v"))
-    ck = checkpoint_partitioned(df, ["k"], 8)
+
+def _hash_exchanges(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"Exchange hashpartitioning", plan))
+
+
+def _reexchanged_rdds(df) -> set[int]:
+    """ids of the checkpointed RDDs that a shuffle Exchange in ``df``'s
+    plan reads through narrow operators only, i.e. re-partitions."""
+    found, stack = set(), [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if kind == "ShuffleExchangeExec":
+            child = node.child()
+            while child.getClass().getSimpleName() in (
+                    "ProjectExec", "FilterExec", "SortExec"):
+                child = child.child()
+            if child.getClass().getSimpleName() == "RDDScanExec":
+                found.add(child.rdd().id())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
+@pytest.mark.parametrize("query", sorted(_MATERIALIZED_LAYOUTS))
+def test_real_query_materializations_keep_layout(spark, registry,
+                                                 monkeypatch, query):
+    """The layout contract of operators.graph.materialize, pinned on
+    the registered queries that rely on it:
+
+    - every materialized frame still reports HashPartitioning on its
+      key with spark.sql.shuffle.partitions partitions (under AQE a
+      plain localCheckpoint reports UnknownPartitioning and every
+      consumer re-shuffles), and AQE is back on after the build;
+    - no consumer in the query's plan re-exchanges a materialized
+      frame on its key (sort-merge lane forced, as at scale);
+    - q94: the ui build plans ONE exchange (repartition(user_id)
+      before distinct lets the dedup run exchange-free) and ui is a
+      true distinct;
+    - q144: each BFS layer input plans exactly ONE hash Exchange —
+      the frontier-sized dst re-key inside distinct(), the dataflow
+      minimum; the edge side and prior layers are read in place."""
+    from hearthstats_spark.operators import graph
+
+    calls = []
+    real = graph.materialize
+
+    def recording(df, *cols):
+        out = real(df, *cols)
+        calls.append((df, cols, out))
+        return out
+
+    monkeypatch.setattr(graph, "materialize", recording)
+    result = registry[query].fn(spark, SF_SMALL)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    part = str(ck._jdf.queryExecution().executedPlan().outputPartitioning())
-    assert "hashpartitioning" in part and "k#" in part
+
+    n_part = spark.conf.get("spark.sql.shuffle.partitions")
+    keys = _MATERIALIZED_LAYOUTS[query]
+    assert len(calls) == len(keys)
+    for (_, cols, out), key in zip(calls, keys):
+        assert cols in ((), (key,))
+        part = str(out._jdf.queryExecution().executedPlan()
+                   .outputPartitioning())
+        assert re.fullmatch(rf"hashpartitioning\({key}#\d+L?, {n_part}\)",
+                            part), part
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = ck.alias("a").join(ck.alias("b"),
-                               F.col("a.k") == F.col("b.k"))
-        p = explain_str(j, "simple")
-        assert "Exchange hashpartitioning" not in p
-        assert j.count() > 0
+        reexchanged = _reexchanged_rdds(result)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
                        str(32 * 1024 * 1024))
+    assert not reexchanged & {
+        out._jdf.queryExecution().analyzed().rdd().id()
+        for _, _, out in calls}
+    assert calls[0][2].count() > 0
+
+    if query == "q94_item_cooccur":
+        ui_in, _, ui = calls[0]
+        assert _hash_exchanges(ui_in) == 1
+        assert ui.count() == ui.distinct().count()
+    if query == "q144_bfs_reach":
+        for layer_in, cols, _ in calls[2:]:
+            assert cols == () and _hash_exchanges(layer_in) == 1
 
 
 def test_bucketed_pagerank_iteration_edge_side_shuffle_free(spark):

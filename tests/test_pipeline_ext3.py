@@ -130,54 +130,3 @@ def test_q199_funnel_monotone(spark, registry):
                 >= rows["deduped"][col] > 0)
         assert (rows["train"][col] + rows["val"][col]
                 + rows["test"][col]) == rows["deduped"][col]
-
-
-def test_q94_ui_materialization_single_exchange_and_layout(spark):
-    """q94's r12 materialization contract (VERDICT r11 item 5):
-
-    - repartition(user_id) BEFORE distinct lets the planner satisfy
-      the (user_id, item) dedup clustering with hash(user_id), so
-      the ui build pays exactly ONE exchange (the r11 form paid two:
-      distinct's hash(user_id, item) + the checkpoint repartition);
-    - checkpoint_preserving keeps hash(user_id), so the self-join on
-      user_id reads both sides in place — ZERO join exchanges;
-    - cnt rides checkpoint_preserving too (a .cache() over a frame
-      derived from a localCheckpoint is re-instanced by relation
-      dedup and silently never substitutes — q108's measured
-      failure), keeping hash(item) for the ca/cb attach joins.
-    """
-    from pyspark.sql import functions as F
-
-    from hearthstats_spark.operators.graph import checkpoint_preserving
-
-    base = spark.range(0, 3000).select(
-        (F.col("id") % 200).alias("user_id"),
-        ((F.col("id") * 13) % 37).alias("item"))
-    build = base.repartition(8, "user_id").distinct()
-    build_plan = build._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"Exchange hashpartitioning", build_plan)) == 1
-
-    # checkpoint a FRESH frame: forcing executedPlan() above planned
-    # `build` under AQE, which erases the layout the checkpoint must
-    # capture (exactly the trap checkpoint_preserving's AQE-off
-    # window exists for — q94 never pre-plans its frame)
-    ui = checkpoint_preserving(base.repartition(8, "user_id").distinct())
-    part = str(ui._jdf.queryExecution().executedPlan()
-               .outputPartitioning())
-    assert "hashpartitioning" in part and "user_id#" in part
-
-    a, b = ui.alias("a"), ui.alias("b")
-    co = (a.join(b, (F.col("a.user_id") == F.col("b.user_id"))
-                 & (F.col("a.item") < F.col("b.item")))
-          .select(F.col("a.item").alias("item_a"),
-                  F.col("b.item").alias("item_b")))
-    join_plan = co._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in join_plan
-
-    cnt = checkpoint_preserving(
-        ui.groupBy("item").agg(F.count(F.lit(1)).alias("n")))
-    cnt_part = str(cnt._jdf.queryExecution().executedPlan()
-                   .outputPartitioning())
-    assert "hashpartitioning" in cnt_part and "item#" in cnt_part
-    # and the materialized dedup really is a distinct
-    assert ui.count() == base.distinct().count()

@@ -50,12 +50,15 @@ def materialize(df: DataFrame, *cols: str) -> DataFrame:
 
     With ``cols`` the frame is first hash-repartitioned by them into
     ``spark.sql.shuffle.partitions`` partitions (the count Spark
-    plans a column repartition with while AQE is off). Without, the
-    frame's EXISTING output partitioning is kept — for plans that
-    already end in the wanted layout (an aggregation or distinct over
-    a materialized scan is hash-partitioned by its keys), where a
-    repartition would only pay a second exchange of identical
-    placement.
+    plans a column repartition with while AQE is off; the session
+    sets it to its task slots unless the caller chose one, see
+    ``session.ensure_conf``). Nothing coalesces them, so that count
+    is also the task count of every stage that reads the checkpoint.
+    Without, the frame's EXISTING output partitioning is kept — for
+    plans that already end in the wanted layout (an aggregation or
+    distinct over a materialized scan is hash-partitioned by its
+    keys), where a repartition would only pay a second exchange of
+    identical placement.
 
     The non-obvious part: under AQE, ``Dataset.localCheckpoint``
     captures ``AdaptiveSparkPlanExec.outputPartitioning``, which

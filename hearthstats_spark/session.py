@@ -13,10 +13,14 @@ Pins the configs every query in this engine relies on:
 - AQE on (coalesce shuffle partitions + skew-join splitting): at
   100 TB AQE's runtime re-planning is the main defence against skew;
   at test scale it collapses the shuffle tail.
-- Modest shuffle parallelism by default (local mode): the driver's
-  bench runs at sf0.1 where 200 default partitions would be pure
-  scheduling overhead. On a real cluster set SPARK_GRAFT_SHUFFLE to
-  ~2-3x total executor cores.
+- Shuffle parallelism = the session's task slots
+  (``sparkContext.defaultParallelism``: N on ``local[N]``, every
+  executor core on a cluster) unless the session already chose a
+  count. Spark's 200 default would be pure scheduling overhead at
+  test scale, and a fixed count over-partitions the two paths AQE
+  never coalesces — ``operators/graph.materialize``'s AQE-off window
+  and the streaming state store. SPARK_GRAFT_SHUFFLE overrides the
+  slot count.
 """
 
 from __future__ import annotations
@@ -56,8 +60,6 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # dims here are tiny; on a cluster this is the default 10MB anyway
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    # exact-distinct inside 32 threads; bump on a real cluster
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     # allow co-partitioning on a SUBSET of the join keys: a frame
     # already hash-partitioned/bucketed by src joining on (src, dst)
     # then keeps its layout and only the other side moves — q98's
@@ -111,7 +113,7 @@ def get_spark(app_name: str = "hearthstats-spark", master: str | None = None,
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return ensure_conf(builder.getOrCreate())
 
 
 def ensure_conf(spark: SparkSession) -> SparkSession:
@@ -123,6 +125,14 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
                 spark.conf.set(k, v)
             except Exception:
                 pass  # static conf on a live session; loader handles the rest
+    # the count only when the session chose none (builder, extra_conf,
+    # conf.set): the registry calls this before every query, and
+    # re-pinning it would silently undo the caller's count
+    if "spark.sql.shuffle.partitions" not in spark.conf.getAll:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            os.environ.get("SPARK_GRAFT_SHUFFLE")
+            or str(spark.sparkContext.defaultParallelism))
     return spark
 
 

@@ -8,9 +8,10 @@ Usage:
 Cluster-fan-out mode: ``SPARK_GRAFT_SHUFFLE=256 python
 scripts/check_oracle.py`` re-runs the whole sweep at cluster-scale
 shuffle parallelism — results must be (and are: round 11, 200/200)
-hash-identical to the 4-partition test-suite conf and the
-32-partition default, the partition-count-independence property
-SCALE.md §Session & runtime records.
+hash-identical to the 4-partition test-suite conf and the default
+(the session's task slots, ``defaultParallelism``), the
+partition-count-independence property SCALE.md §Session & runtime
+records.
 
 Triage notes for specific failures (ADVICE r10):
 

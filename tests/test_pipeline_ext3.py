@@ -88,7 +88,9 @@ def test_q182_partition_count_independent(spark, registry):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        alt = {r["doc_id"]: tuple(r) for r in fn(spark, SF_SMALL).collect()}
+        alt_df = fn(spark, SF_SMALL)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        alt = {r["doc_id"]: tuple(r) for r in alt_df.collect()}
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert base == alt
